@@ -3,10 +3,8 @@
 Streaming counterpart of ``operators/indicators.py:atr`` (Wilder
 smoothing): the batch path rides the blocked EWM scan over full
 histories; this operator carries a **3-field state vector per symbol**
-(row count, last close, running ATR) across micro-batches via
-``applyInPandasWithState`` — O(symbols) state for an unbounded feed,
-the same design as streaming/stateful.py (RSI/MACD) and
-streaming/vwap.py.
+(row count, last close, running ATR) across micro-batches — O(symbols)
+state for an unbounded feed, declared through streaming/online.py.
 
 Recurrence (matches ``pandas ewm(alpha=1/n, adjust=False)`` over the
 true range, the batch operator's documented convention):
@@ -20,53 +18,22 @@ Input is bar-shaped (``high``/``low``/``close``) or tick-shaped
 (``price`` only — high and low collapse to the price, so the true
 range degrades to ``|p - prev_p|``, the tick-to-tick range).
 
-Parity: the stream and ``online_atr_batch`` share ``_scan_hlc``
-verbatim, so stream == batch-twin is bit-exact (structural, pinned in
-tests/test_streaming.py); the batch twin tracks the blocked-EWM
+Parity: stream == ``online_atr_batch`` is bit-exact (one scan, pinned
+in tests/test_streaming.py); the batch twin tracks the blocked-EWM
 ``atr(method="wilder")`` to ~1e-12 relative (same recurrence, block-
 parallel FP association).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_atr", "online_atr_batch"]
 
-ATR_STATE_SCHEMA = StructType(
-    [
-        StructField("n_rows", LongType()),
-        StructField("last_close", DoubleType()),
-        StructField("atr", DoubleType()),
-    ]
-)
-
-ATR_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("tr", DoubleType()),
-        StructField("atr", DoubleType()),
-    ]
-)
-
-#: zero-history state (mirrors ATR_STATE_SCHEMA field order)
-_FRESH = (0, float("nan"), 0.0)
+ATR_STATE_SCHEMA, _FRESH = state_vector(n_rows=0, last_close=float("nan"), atr=0.0)
 
 
 def _scan_hlc(highs, lows, closes, st: tuple, alpha: float):
@@ -99,34 +66,13 @@ def _hlc(pdf: pd.DataFrame):
     return p, p, p
 
 
-def _atr_func(window: int, state_ttl: str | int | None):
-    alpha = 1.0 / window
-
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            highs, lows, closes = _hlc(pdf)
-            vals, st = _scan_hlc(highs, lows, closes, st, alpha)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(c), tr, atr)
-                    for ts, c, (tr, atr) in zip(pdf["ts"], closes, vals)
-                ],
-                columns=["symbol", "ts", "close", "tr", "atr"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+_OP = OnlineOperator(
+    lambda pdf, st, alpha: _scan_hlc(*_hlc(pdf), st, alpha),
+    ATR_STATE_SCHEMA,
+    _FRESH,
+    out_fields=doubles("tr", "atr"),
+    carry=doubles("close"),
+)
 
 
 def online_atr(
@@ -139,15 +85,9 @@ def online_atr(
     One groupBy(symbol) shuffle; the state store pins each symbol's
     scan to one task per micro-batch. ``state_ttl`` evicts quiet
     symbols' 3-field state (same semantics as online_indicators)."""
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _atr_func(window, state_ttl),
-        outputStructType=ATR_OUTPUT_SCHEMA,
-        stateStructType=ATR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    if "close" not in ticks.columns:
+        ticks = ticks.withColumn("close", ticks["price"])
+    return _OP.stream(ticks, 1.0 / window, state_ttl=state_ttl)
 
 
 def online_atr_batch(
@@ -159,21 +99,4 @@ def online_atr_batch(
     recurrence run from fresh state over each symbol's full in-order
     history via plain ``applyInPandas``. Adds ``tr`` and ``atr`` to
     the input columns."""
-    import pyspark.sql.types as T
-
-    alpha = 1.0 / window
-    out_schema = T.StructType(
-        list(bars.schema.fields)
-        + [StructField("tr", DoubleType()), StructField("atr", DoubleType())]
-    )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        highs, lows, closes = _hlc(pdf)
-        vals, _ = _scan_hlc(highs, lows, closes, _FRESH, alpha)
-        return pd.concat(
-            [pdf, pd.DataFrame(vals, columns=["tr", "atr"])], axis=1
-        )
-
-    return bars.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    return _OP.batch(bars, 1.0 / window, order_cols=order_cols)

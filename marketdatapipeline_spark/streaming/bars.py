@@ -26,16 +26,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Aggregations shared verbatim by the streaming and batch paths —
-#: batch parity is by construction, not by reimplementation.
-_BAR_AGGS = (
-    lambda: F.min_by("price", "ts").alias("open"),
-    lambda: F.max("price").alias("high"),
-    lambda: F.min("price").alias("low"),
-    lambda: F.max_by("price", "ts").alias("close"),
-    lambda: F.sum("size").alias("volume"),
-    lambda: F.count(F.lit(1)).alias("tick_count"),
-)
+def _bars(ticks: DataFrame, bar_interval: str) -> DataFrame:
+    """The aggregation shared verbatim by the streaming and batch paths —
+    batch parity is by construction, not by reimplementation."""
+    return (
+        ticks.groupBy(F.window("ts", bar_interval).alias("bar"), "symbol")
+        .agg(
+            F.min_by("price", "ts").alias("open"),
+            F.max("price").alias("high"),
+            F.min("price").alias("low"),
+            F.max_by("price", "ts").alias("close"),
+            F.sum("size").alias("volume"),
+            F.count(F.lit(1)).alias("tick_count"),
+        )
+        .select(
+            "symbol",
+            F.col("bar.start").alias("datetime"),
+            "open",
+            "high",
+            "low",
+            "close",
+            "volume",
+            "tick_count",
+        )
+    )
 
 
 def ticks_to_bars(
@@ -50,21 +64,7 @@ def ticks_to_bars(
     with ``datetime`` = window start, so finalized bars can feed
     ``compute_all_features`` directly.
     """
-    return (
-        ticks.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", bar_interval).alias("bar"), "symbol")
-        .agg(*[a() for a in _BAR_AGGS])
-        .select(
-            "symbol",
-            F.col("bar.start").alias("datetime"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-            "tick_count",
-        )
-    )
+    return _bars(ticks.withWatermark("ts", watermark), bar_interval)
 
 
 def bars_from_ticks_batch(ticks: DataFrame, bar_interval: str = "1 minute") -> DataFrame:
@@ -74,17 +74,4 @@ def bars_from_ticks_batch(ticks: DataFrame, bar_interval: str = "1 minute") -> D
     backfills over historical tick archives, where a plain shuffle
     aggregation beats streaming state.
     """
-    return (
-        ticks.groupBy(F.window("ts", bar_interval).alias("bar"), "symbol")
-        .agg(*[a() for a in _BAR_AGGS])
-        .select(
-            "symbol",
-            F.col("bar.start").alias("datetime"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-            "tick_count",
-        )
-    )
+    return _bars(ticks, bar_interval)

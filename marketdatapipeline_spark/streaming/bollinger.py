@@ -1,12 +1,10 @@
 """Online Bollinger bands — the streaming twin of the reference's
 headline volatility indicator (src/features/engineering.py bb_*).
 
-RSI/MACD, anchored VWAP, ATR, KAMA, the volume clock, and CUSUM
-already stream; Bollinger completes the set: O(window) state per
-symbol (the trailing closes), ``applyInPandasWithState`` carry, and
-a batch twin sharing the scan verbatim (bit-exact stream == batch).
-The twin tracks the batch feature pipeline's prefix-sum RollingPlan
-to FP-association tolerance — same split as the ATR/Wilder family.
+O(window) state per symbol (the trailing closes), declared through
+streaming/online.py. The batch twin tracks the batch feature pipeline's
+prefix-sum RollingPlan to FP-association tolerance — same split as the
+ATR/Wilder family.
 
 Convention: pandas ``rolling(window, min_periods=window)`` — bands
 null until the window fills; std is ddof=1; ``bb_width =
@@ -16,39 +14,14 @@ null until the window fills; std is ddof=1; ``bb_width =
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
-from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_bollinger", "online_bollinger_batch"]
 
-BOLL_STATE_SCHEMA = StructType(
-    [StructField("tail", ArrayType(DoubleType()))]
-)
-
-BOLL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("bb_middle", DoubleType()),
-        StructField("bb_upper", DoubleType()),
-        StructField("bb_lower", DoubleType()),
-        StructField("bb_width", DoubleType()),
-    ]
-)
+BOLL_STATE_SCHEMA, _FRESH = state_vector(tail=[])
 
 
 def _scan_boll(prices, tail: list, window: int, n_std: float):
@@ -76,38 +49,25 @@ def _scan_boll(prices, tail: list, window: int, n_std: float):
         std = math.sqrt(q / (window - 1))
         upper = mean + std * n_std
         lower = mean - std * n_std
-        out.append((mean, upper, lower, (upper - lower) / mean))
+        # no relative width on a zero middle band: NULL, where the pandas
+        # feature path gives NaN, instead of ZeroDivisionError
+        width = (upper - lower) / mean if mean != 0.0 else None
+        out.append((mean, upper, lower, width))
     return out, tail
 
 
-def _boll_func(window: int, n_std: float, state_ttl):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (tail,) = state.get if state.exists else ([],)
-        tail = list(tail)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, tail = _scan_boll(pdf["price"], tail, window, n_std)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), m, u, lo, w)
-                    for ts, p, (m, u, lo, w) in zip(
-                        pdf["ts"], pdf["price"], vals
-                    )
-                ],
-                columns=[f.name for f in BOLL_OUTPUT_SCHEMA.fields],
-            )
-        state.update((tail,))
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _scan_frame(pdf, st: tuple, window: int, n_std: float, col: str):
+    vals, tail = _scan_boll(pdf[col], list(st[0]), window, n_std)
+    return vals, (tail,)
 
-    return func
+
+_OP = OnlineOperator(
+    _scan_frame,
+    BOLL_STATE_SCHEMA,
+    _FRESH,
+    out_fields=doubles("bb_middle", "bb_upper", "bb_lower", "bb_width"),
+    carry=doubles("price"),
+)
 
 
 def online_bollinger(
@@ -120,15 +80,7 @@ def online_bollinger(
     state per symbol."""
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _boll_func(window, float(n_std), state_ttl),
-        outputStructType=BOLL_OUTPUT_SCHEMA,
-        stateStructType=BOLL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    return _OP.stream(ticks, window, float(n_std), "price", state_ttl=state_ttl)
 
 
 def online_bollinger_batch(
@@ -140,25 +92,4 @@ def online_bollinger_batch(
 ) -> DataFrame:
     """Batch twin: identical ``_scan_boll`` from fresh state over
     each symbol's in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("bb_middle", DoubleType()),
-            StructField("bb_upper", DoubleType()),
-            StructField("bb_lower", DoubleType()),
-            StructField("bb_width", DoubleType()),
-        ]
-    )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_boll(pdf[price_col], [], window, float(n_std))
-        extra = pd.DataFrame(
-            vals, columns=["bb_middle", "bb_upper", "bb_lower", "bb_width"]
-        )
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    return _OP.batch(ticks, window, float(n_std), price_col, order_cols=order_cols)

@@ -12,55 +12,23 @@ when ``s_neg < -h`` -> -1 event, reset ``s_neg``.
 
 The reset makes this a NON-linear recurrence — unlike EWMA there is
 no block-parallel decomposition and no SQL restatement, so the
-operator lives in the streaming family: per-symbol state (the two
-accumulators + last price) carried across micro-batches by
-``applyInPandasWithState``, with a batch twin sharing the scan
-verbatim (bit-exact parity, the repo's stream==batch discipline).
-O(symbols) state; one groupBy(symbol) shuffle.
+operator lives in the streaming family (streaming/online.py):
+per-symbol state (the two accumulators + last price) carried across
+micro-batches, O(symbols) state.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import IntegerType, StructField
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_cusum", "online_cusum_batch"]
 
-CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("n_rows", LongType()),
-        StructField("last_price", DoubleType()),
-        StructField("s_pos", DoubleType()),
-        StructField("s_neg", DoubleType()),
-    ]
+CUSUM_STATE_SCHEMA, _FRESH = state_vector(
+    n_rows=0, last_price=float("nan"), s_pos=0.0, s_neg=0.0
 )
-
-CUSUM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("s_pos", DoubleType()),
-        StructField("s_neg", DoubleType()),
-        StructField("event", IntegerType()),
-    ]
-)
-
-_FRESH = (0, float("nan"), 0.0, 0.0)
 
 
 def _scan_cusum(prices, st: tuple, threshold: float):
@@ -87,33 +55,13 @@ def _scan_cusum(prices, st: tuple, threshold: float):
     return out, (n_rows, last, s_pos, s_neg)
 
 
-def _cusum_func(threshold: float, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, st = _scan_cusum(pdf["price"], st, threshold)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), sp, sn, ev)
-                    for ts, p, (sp, sn, ev) in zip(
-                        pdf["ts"], pdf["price"], vals
-                    )
-                ],
-                columns=["symbol", "ts", "price", "s_pos", "s_neg", "event"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+_OP = OnlineOperator(
+    lambda pdf, st, threshold, col: _scan_cusum(pdf[col], st, threshold),
+    CUSUM_STATE_SCHEMA,
+    _FRESH,
+    out_fields=(*doubles("s_pos", "s_neg"), StructField("event", IntegerType())),
+    carry=doubles("price"),
+)
 
 
 def online_cusum(
@@ -126,15 +74,7 @@ def online_cusum(
     on it downstream to get the sampled event times."""
     if threshold <= 0:
         raise ValueError(f"threshold must be > 0, got {threshold}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _cusum_func(float(threshold), state_ttl),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    return _OP.stream(ticks, float(threshold), "price", state_ttl=state_ttl)
 
 
 def online_cusum_batch(
@@ -145,24 +85,4 @@ def online_cusum_batch(
 ) -> DataFrame:
     """Batch twin: identical ``_scan_cusum`` from fresh state over
     each symbol's in-order history; adds s_pos/s_neg/event."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("event", IntegerType()),
-        ]
-    )
-    order = list(order_cols)
-    th = float(threshold)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_cusum(pdf[price_col], _FRESH, th)
-        extra = pd.DataFrame(vals, columns=["s_pos", "s_neg", "event"])
-        extra["event"] = extra["event"].astype("int32")
-        return pd.concat([pdf, extra], axis=1)
-
-    return df.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    return _OP.batch(df, float(threshold), price_col, order_cols=order_cols)

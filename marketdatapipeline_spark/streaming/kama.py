@@ -5,12 +5,9 @@ KAMA's smoothing constant varies per bar with the efficiency ratio
 RSI/MACD/ATR the recursion has a VARIABLE coefficient —
 ``kama_t = kama_{t-1} + sc_t (p_t - kama_{t-1})`` with ``sc_t``
 data-dependent — and no constant-alpha blocked decomposition
-applies. That makes it a natural citizen of the streaming family:
-O(window) state per symbol (the trailing closes that define the
-efficiency ratio, plus the running KAMA), carried across
-micro-batches by ``applyInPandasWithState``, with a batch twin
-sharing the scan verbatim (bit-exact stream == batch, the repo's
-parity discipline).
+applies. That makes it a natural citizen of the streaming family
+(streaming/online.py): O(window) state per symbol (the trailing closes
+that define the efficiency ratio, plus the running KAMA).
 
 Convention (Kaufman's book / the common TA implementation):
 ``er = |p_t - p_{t-n}| / sum |p_i - p_{i-1}|`` over the window
@@ -21,42 +18,14 @@ with a full window (``kama = p`` there), null before.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_kama", "online_kama_batch"]
 
-KAMA_STATE_SCHEMA = StructType(
-    [
-        StructField("n_rows", LongType()),
-        StructField("tail", ArrayType(DoubleType())),  # last window+1 closes
-        StructField("kama", DoubleType()),
-    ]
-)
-
-KAMA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("efficiency_ratio", DoubleType()),
-        StructField("kama", DoubleType()),
-    ]
-)
+#: tail holds the last window+1 closes
+KAMA_STATE_SCHEMA, _FRESH = state_vector(n_rows=0, tail=[], kama=float("nan"))
 
 
 def _scan_kama(
@@ -92,34 +61,15 @@ def _scan_kama(
     return out, (n_rows, tail, kama)
 
 
-_FRESH = (0, [], float("nan"))
-
-
-def _kama_func(window: int, fast: int, slow: int, state_ttl):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, st = _scan_kama(pdf["price"], st, window, fast, slow)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, float(p), er, k)
-                    for ts, p, (er, k) in zip(pdf["ts"], pdf["price"], vals)
-                ],
-                columns=["symbol", "ts", "price", "efficiency_ratio", "kama"],
-            )
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+_OP = OnlineOperator(
+    lambda pdf, st, window, fast, slow, col: _scan_kama(
+        pdf[col], st, window, fast, slow
+    ),
+    KAMA_STATE_SCHEMA,
+    _FRESH,
+    out_fields=doubles("efficiency_ratio", "kama"),
+    carry=doubles("price"),
+)
 
 
 def online_kama(
@@ -134,15 +84,7 @@ def online_kama(
         raise ValueError(
             f"need window >= 1, 1 <= fast < slow; got {window}, {fast}, {slow}"
         )
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _kama_func(window, fast, slow, state_ttl),
-        outputStructType=KAMA_OUTPUT_SCHEMA,
-        stateStructType=KAMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    return _OP.stream(ticks, window, fast, slow, "price", state_ttl=state_ttl)
 
 
 def online_kama_batch(
@@ -155,21 +97,4 @@ def online_kama_batch(
 ) -> DataFrame:
     """Batch twin: the identical ``_scan_kama`` from fresh state over
     each symbol's in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("efficiency_ratio", DoubleType()),
-            StructField("kama", DoubleType()),
-        ]
-    )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_kama(pdf[price_col], _FRESH, window, fast, slow)
-        extra = pd.DataFrame(vals, columns=["efficiency_ratio", "kama"])
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    return _OP.batch(ticks, window, fast, slow, price_col, order_cols=order_cols)

@@ -5,10 +5,10 @@ The reference (ErwinGoneMad/MarketDataPipeline) polls HTTP with sleeps
 (src/data/ingestion.py:231-239); this is that ingestion loop rebuilt as
 Structured Streaming. One call wires:
 
-* **ticks → online RSI/MACD** (streaming/stateful.py) appended to
-  ``<out>/indicators`` — engine-managed per-symbol state;
-* **ticks → online anchored VWAP** (streaming/vwap.py) appended to
-  ``<out>/vwap``;
+* **ticks → online RSI/MACD and anchored VWAP**: ONE query on the fused
+  operator ``online_ticks`` (streaming/combined.py, engine-managed
+  per-symbol state), whose ``foreachBatch`` sink appends the indicator
+  columns to ``<out>/indicators`` and the VWAP columns to ``<out>/vwap``;
 * **documents → incremental LSH dedup** (textops/incremental.py) via
   ``foreachBatch``: each micro-batch is deduplicated against the
   persisted store (and itself), verdicts land in ``<out>/verdicts``,
@@ -20,14 +20,13 @@ test (tests/test_pipeline_streaming.py) drives several file drops
 through ALL legs at once and re-checks every sink against the batch
 computation over the union of the drops.
 
-Scale notes. The tick legs share ONE streaming query: the fused
-stateful operator (streaming/combined.py) computes both legs in one
-sorted pass per symbol and ``foreachBatch`` fans the micro-batch out
-to both sinks — each dropped file is read, parsed, and shuffled once
-(r7 ran a query per leg, paying source I/O twice); state is O(symbols)
-with one state store. The dedup leg runs inside ``foreachBatch``
-because the store is an external table (parquet keys/sets), not
-engine state. Its
+Scale notes. Sharing one tick query means each dropped file is read,
+parsed, and shuffled once (r7 ran a query per leg, paying source I/O
+twice), with O(symbols) state in one state store. The trade-off: the
+legs share offsets/backpressure, and the tick parquet appends are
+at-least-once per retried batch rather than the file sink's
+exactly-once. The dedup leg runs inside ``foreachBatch`` because the
+store is an external table (parquet keys/sets), not engine state. Its
 append-then-verdict write is idempotent only per completed batch: a
 retried micro-batch re-ingests (at-least-once semantics) — exactly the
 contract documented on LSHDedupStore; a table format with atomic
@@ -120,15 +119,9 @@ def start_ingestion(
     pipe = IngestionPipeline()
 
     if tick_dir is not None:
-        # ONE query for both tick legs: the fused stateful operator
-        # (streaming/combined.py) computes RSI/MACD and VWAP in one
-        # sorted pass per symbol, and foreachBatch projects the two
-        # sink schemas from the same micro-batch — each dropped tick
-        # file is read, parsed, and shuffled exactly once (the r7
-        # two-query layout paid all of that twice). Trade-off: the
-        # legs now share offsets/backpressure, and the parquet appends
-        # are at-least-once per retried batch (same contract as the
-        # dedup leg) rather than the file-sink's exactly-once.
+        # ONE query for both tick legs (see "Scale notes" above):
+        # foreachBatch projects the two sink schemas from the same
+        # micro-batch of the fused operator.
         ticks = read_tick_stream(spark, tick_dir)
         ind_path = os.path.join(out_dir, "indicators")
         vwap_path = os.path.join(out_dir, "vwap")

@@ -18,14 +18,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def _session_aggs(time_col: str):
+
+def _sessionize(events: DataFrame, gap: str, user_col: str, time_col: str):
     """Shared by the streaming and batch paths — parity by construction.
-    Parametric in ``time_col`` so a frame whose event-time column is not
-    named ``ts`` aggregates the same column it sessionizes on."""
+    Aggregates ``time_col``, the column it sessionizes on, whatever its
+    name."""
     return (
-        F.min(time_col).alias("session_start"),
-        F.max(time_col).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
+        events.groupBy(
+            F.session_window(F.col(time_col), gap).alias("session"),
+            F.col(user_col),
+        )
+        .agg(
+            F.min(time_col).alias("session_start"),
+            F.max(time_col).alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .select(
+            user_col,
+            F.col("session.start").alias("window_start"),
+            F.col("session.end").alias("window_end"),
+            "session_start",
+            "session_end",
+            "n_events",
+        )
     )
 
 
@@ -38,22 +53,8 @@ def sessionize_stream(
 ) -> DataFrame:
     """Per-(user, session) summary rows, emitted in append mode once
     the watermark closes the session."""
-    return (
-        events.withWatermark(time_col, watermark)
-        .groupBy(
-            F.session_window(F.col(time_col), gap).alias("session"),
-            F.col(user_col),
-        )
-        .agg(*_session_aggs(time_col))
-        .select(
-            user_col,
-            F.col("session.start").alias("window_start"),
-            F.col("session.end").alias("window_end"),
-            "session_start",
-            "session_end",
-            "n_events",
-        )
-    )
+    events = events.withWatermark(time_col, watermark)
+    return _sessionize(events, gap, user_col, time_col)
 
 
 def sessionize_batch(
@@ -72,18 +73,4 @@ def sessionize_batch(
     landed); ``session_end`` is the last event itself, matching
     ``operators.sessions.session_stats``.
     """
-    return (
-        events.groupBy(
-            F.session_window(F.col(time_col), gap).alias("session"),
-            F.col(user_col),
-        )
-        .agg(*_session_aggs(time_col))
-        .select(
-            user_col,
-            F.col("session.start").alias("window_start"),
-            F.col("session.end").alias("window_end"),
-            "session_start",
-            "session_end",
-            "n_events",
-        )
-    )
+    return _sessionize(events, gap, user_col, time_col)

@@ -4,9 +4,9 @@ Streaming counterpart of the batch EWM stage
 (features/ewm.py:add_technical_ewm_features — itself the Spark
 re-expression of reference src/features/engineering.py:36-57). Where
 the batch path needs each symbol's full history in hand, this operator
-carries an **11-field state vector per symbol** (9 doubles + 2 longs) across micro-batches
-via ``applyInPandasWithState``, so an unbounded tick feed gets
-RSI/MACD continuously with O(symbols) state, not O(rows).
+carries an **11-field state vector per symbol** (9 doubles + 2 longs)
+across micro-batches (streaming/online.py), so an unbounded tick feed
+gets RSI/MACD continuously with O(symbols) state, not O(rows).
 
 State per symbol (all recurrences are linear scans, so constant
 per-row work):
@@ -30,52 +30,18 @@ the answer in ANY engine, including the reference's.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_rows", LongType()),
-        StructField("last_close", DoubleType()),
-        StructField("gain_ewm", DoubleType()),
-        StructField("loss_ewm", DoubleType()),
-        StructField("gain_seeded", LongType()),  # 0/1: Wilder EWMAs seeded yet
-        StructField("fast_n", DoubleType()),
-        StructField("fast_d", DoubleType()),
-        StructField("slow_n", DoubleType()),
-        StructField("slow_d", DoubleType()),
-        StructField("sig_n", DoubleType()),
-        StructField("sig_d", DoubleType()),
-    ]
-)
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("close", DoubleType()),
-        StructField("rsi", DoubleType()),
-        StructField("macd", DoubleType()),
-        StructField("macd_signal", DoubleType()),
-        StructField("macd_histogram", DoubleType()),
-    ]
+#: per-symbol state as field=zero-history value; gain_seeded is 0/1,
+#: whether the Wilder EWMAs are seeded yet
+STATE_SCHEMA, _FRESH_STATE = state_vector(
+    n_rows=0, last_close=float("nan"), gain_ewm=0.0, loss_ewm=0.0, gain_seeded=0,
+    fast_n=0.0, fast_d=0.0, slow_n=0.0, slow_d=0.0, sig_n=0.0, sig_d=0.0,
 )
 
 _EPS = 1e-10  # reference's literal epsilon guard (engineering.py:45)
-
-#: zero-history state vector (mirrors STATE_SCHEMA field order)
-_FRESH_STATE = (0, float("nan"), 0.0, 0.0, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
 
 
 def _coeffs(
@@ -151,79 +117,13 @@ def _scan_closes(closes, st: tuple, coeffs: tuple):
     )
 
 
-def _ttl_ms(ttl: str | int) -> int:
-    """'30 minutes' / '1 hour' / raw ms int -> milliseconds (pyspark's
-    GroupState.setTimeoutDuration accepts only an int)."""
-    if isinstance(ttl, int):
-        return ttl
-    try:
-        n, unit = ttl.strip().split()
-        mult = {
-            "millisecond": 1,
-            "second": 1000,
-            "minute": 60_000,
-            "hour": 3_600_000,
-            "day": 86_400_000,
-        }[unit.lower().rstrip("s")]
-        return int(n) * mult
-    except (ValueError, KeyError) as e:
-        raise ValueError(
-            f"unparseable state_ttl {ttl!r}: expected '<int> "
-            "milliseconds|seconds|minutes|hours|days' or raw ms int"
-        ) from e
-
-
-def _indicator_func(
-    rsi_period: int,
-    macd_fast: int,
-    macd_slow: int,
-    macd_signal: int,
-    state_ttl: str | int | None = None,
-):
-    coeffs = _coeffs(rsi_period, macd_fast, macd_slow, macd_signal)
-
-    def func(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # symbol went quiet past the TTL: evict its state row.
-            # If it later resumes, indicators restart from fresh state
-            # (same convention as a new symbol appearing).
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH_STATE
-
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            closes = pdf["price" if "price" in pdf else "close"]
-            vals, st = _scan_closes(closes, st, coeffs)
-            out = pd.DataFrame(
-                [
-                    (key[0], ts, float(close), rsi, macd, signal, hist)
-                    for ts, close, (rsi, macd, signal, hist) in zip(
-                        pdf["ts"], closes, vals
-                    )
-                ],
-                columns=[
-                    "symbol",
-                    "ts",
-                    "close",
-                    "rsi",
-                    "macd",
-                    "macd_signal",
-                    "macd_histogram",
-                ],
-            )
-            # nullable Float64 ⇒ NaN crosses Arrow as NULL, matching the
-            # batch path's nan_to_null (features/ewm.py:44).
-            out["rsi"] = out["rsi"].astype("Float64")
-            yield out
-
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
-
-    return func
+_OP = OnlineOperator(
+    lambda pdf, st, coeffs: _scan_closes(pdf["close"], st, coeffs),
+    STATE_SCHEMA,
+    _FRESH_STATE,
+    out_fields=doubles("rsi", "macd", "macd_signal", "macd_histogram"),
+    carry=doubles("close"),
+)
 
 
 def online_indicators(
@@ -249,16 +149,11 @@ def online_indicators(
     churns (delisted tickers, session-scoped ids) — without it, a
     year of churn accumulates state for every symbol ever seen.
     """
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _indicator_func(
-            rsi_period, macd_fast, macd_slow, macd_signal, state_ttl
-        ),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
+    close = ticks["price" if "price" in ticks.columns else "close"]
+    return _OP.stream(
+        ticks.select("symbol", "ts", close.alias("close")),
+        _coeffs(rsi_period, macd_fast, macd_slow, macd_signal),
+        state_ttl=state_ttl,
     )
 
 
@@ -285,28 +180,8 @@ def online_indicators_batch(
     ``order_cols`` (bar shape). Output keeps ``symbol`` + order_cols +
     close and adds rsi / macd / macd_signal / macd_histogram.
     """
-    import pyspark.sql.types as T
-
-    coeffs = _coeffs(rsi_period, macd_fast, macd_slow, macd_signal)
-    in_schema = bars.schema
-    out_schema = T.StructType(
-        list(in_schema.fields)
-        + [
-            StructField("rsi", DoubleType()),
-            StructField("macd", DoubleType()),
-            StructField("macd_signal", DoubleType()),
-            StructField("macd_histogram", DoubleType()),
-        ]
+    return _OP.batch(
+        bars,
+        _coeffs(rsi_period, macd_fast, macd_slow, macd_signal),
+        order_cols=order_cols,
     )
-    order = list(order_cols)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_closes(pdf["close"], _FRESH_STATE, coeffs)
-        ind = pd.DataFrame(
-            vals, columns=["rsi", "macd", "macd_signal", "macd_histogram"]
-        )
-        ind["rsi"] = ind["rsi"].astype("Float64")  # NaN -> NULL via Arrow
-        return pd.concat([pdf, ind], axis=1)
-
-    return bars.groupBy("symbol").applyInPandas(run, schema=out_schema)

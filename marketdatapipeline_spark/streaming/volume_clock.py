@@ -4,50 +4,26 @@
 Batch volume bars assign each row to ``floor(cum_before /
 bucket_size)`` via a running-sum window; on an unbounded feed that
 cumulative volume IS the state — one number per symbol, carried
-across micro-batches with ``applyInPandasWithState`` (the same
-O(symbols) state design as streaming/vwap.py's anchored VWAP).
+across micro-batches (streaming/online.py).
 
 The stream emits the per-tick bucket assignment (append mode);
 downstream aggregation to OHLCV-per-bucket composes with any sink
 (the bucket id is deterministic, so late aggregation is an ordinary
-groupBy). Parity is structural: the handler and the batch twin share
-``_scan_cum`` verbatim, and with integer-valued sizes every prefix
-sum is exact, so stream == batch == the window-based
-``volume_bars`` bucket column bit-for-bit.
+groupBy). With integer-valued sizes every prefix sum is exact, so
+stream == batch == the window-based ``volume_bars`` bucket column
+bit-for-bit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import LongType, StructField
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_volume_clock", "online_volume_clock_batch"]
 
-VC_STATE_SCHEMA = StructType([StructField("cum_volume", DoubleType())])
-
-VC_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("size", DoubleType()),
-        StructField("bucket", LongType()),
-        StructField("cum_volume", DoubleType()),
-    ]
-)
+VC_STATE_SCHEMA, _FRESH = state_vector(cum_volume=0.0)
 
 
 def _scan_cum(sizes, cum: float, bucket_size: float):
@@ -62,33 +38,18 @@ def _scan_cum(sizes, cum: float, bucket_size: float):
     return out, cum
 
 
-def _vc_func(bucket_size: float, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (cum,) = state.get if state.exists else (0.0,)
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vals, cum = _scan_cum(pdf["size"], cum, bucket_size)
-            yield pd.DataFrame(
-                [
-                    (key[0], ts, p, s, b, c)
-                    for ts, p, s, (b, c) in zip(
-                        pdf["ts"], pdf["price"], pdf["size"], vals
-                    )
-                ],
-                columns=["symbol", "ts", "price", "size", "bucket", "cum_volume"],
-            )
-        state.update((cum,))
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _scan_frame(pdf, st: tuple, bucket_size: float):
+    vals, cum = _scan_cum(pdf["size"], st[0], bucket_size)
+    return vals, (cum,)
 
-    return func
+
+_OP = OnlineOperator(
+    _scan_frame,
+    VC_STATE_SCHEMA,
+    _FRESH,
+    out_fields=(StructField("bucket", LongType()), *doubles("cum_volume")),
+    carry=doubles("price", "size"),
+)
 
 
 def online_volume_clock(
@@ -100,15 +61,7 @@ def online_volume_clock(
     One groupBy(symbol) shuffle; state is ONE float per symbol."""
     if bucket_size <= 0:
         raise ValueError(f"bucket_size must be > 0, got {bucket_size}")
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _vc_func(float(bucket_size), state_ttl),
-        outputStructType=VC_OUTPUT_SCHEMA,
-        stateStructType=VC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    return _OP.stream(ticks, float(bucket_size), state_ttl=state_ttl)
 
 
 def online_volume_clock_batch(
@@ -118,22 +71,4 @@ def online_volume_clock_batch(
 ) -> DataFrame:
     """Batch twin: the identical ``_scan_cum`` from fresh state over
     each symbol's full in-order history."""
-    import pyspark.sql.types as T
-
-    out_schema = T.StructType(
-        list(ticks.schema.fields)
-        + [
-            StructField("bucket", LongType()),
-            StructField("cum_volume", DoubleType()),
-        ]
-    )
-    order = list(order_cols)
-    bs = float(bucket_size)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        vals, _ = _scan_cum(pdf["size"], 0.0, bs)
-        extra = pd.DataFrame(vals, columns=["bucket", "cum_volume"])
-        return pd.concat([pdf, extra], axis=1)
-
-    return ticks.groupBy("symbol").applyInPandas(run, schema=out_schema)
+    return _OP.batch(ticks, float(bucket_size), order_cols=order_cols)

@@ -3,8 +3,8 @@ operators/vwap.py:anchored_vwap.
 
 The batch operator needs each (symbol, period)'s history inside one
 window frame; this one carries a **3-field state vector per symbol**
-(anchor-period start + the two running sums) across micro-batches via
-``applyInPandasWithState``, so an unbounded tick feed gets the running
+(anchor-period start + the two running sums) across micro-batches
+(streaming/online.py), so an unbounded tick feed gets the running
 day/week/month VWAP with O(symbols) state, not O(rows). A tick whose
 anchor period differs from the state's resets the sums — the period
 rollover needs no timer, the first tick of the new period triggers it.
@@ -19,44 +19,16 @@ any engine.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from marketdatapipeline_spark.streaming.stateful import _ttl_ms
+from marketdatapipeline_spark.streaming.online import OnlineOperator, doubles, state_vector
 
 __all__ = ["online_vwap", "online_vwap_batch"]
 
-VWAP_STATE_SCHEMA = StructType(
-    [
-        StructField("anchor_us", LongType()),  # -1 = fresh
-        StructField("pv", DoubleType()),
-        StructField("v", DoubleType()),
-    ]
-)
-
-VWAP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("symbol", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("price", DoubleType()),
-        StructField("size", DoubleType()),
-        StructField("vwap", DoubleType()),
-        StructField("vwap_dev", DoubleType()),
-    ]
-)
-
-_FRESH = (-1, 0.0, 0.0)
+#: anchor_us -1 = fresh
+VWAP_STATE_SCHEMA, _FRESH = state_vector(anchor_us=-1, pv=0.0, v=0.0)
 
 
 def _anchor_us(ts: pd.Series, anchor: str) -> pd.Series:
@@ -94,38 +66,24 @@ def _scan_vwap(pdf: pd.DataFrame, st: tuple, anchor: str):
     return vwaps, (a, pv, v)
 
 
-def _vwap_func(anchor: str, state_ttl: str | int | None):
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = tuple(state.get) if state.exists else _FRESH
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values("ts")
-            vwaps, st = _scan_vwap(pdf, st, anchor)
-            out = pd.DataFrame(
-                {
-                    "symbol": key[0],
-                    "ts": pdf["ts"].to_numpy(),
-                    "price": pdf["price"].to_numpy(),
-                    "size": pdf["size"].to_numpy(),
-                    # nullable Float64 so zero-volume None reaches Spark
-                    # as NULL (a plain float64 column would coerce it to
-                    # NaN and break the null-convention parity)
-                    "vwap": pd.array(vwaps, dtype="Float64"),
-                }
-            )
-            out["vwap_dev"] = out["price"] - out["vwap"]
-            yield out
-        state.update(st)
-        if state_ttl is not None:
-            state.setTimeoutDuration(_ttl_ms(state_ttl))
+def _check_anchor(anchor: str) -> None:
+    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)
 
-    return func
+
+def _vwap_columns(pdf: pd.DataFrame, st: tuple, anchor: str):
+    vwaps, st = _scan_vwap(pdf, st, anchor)
+    # None on zero volume becomes NaN here and reaches Spark as NULL
+    vwap = np.array(vwaps, dtype=float)
+    return {"vwap": vwap, "vwap_dev": pdf["price"].to_numpy() - vwap}, st
+
+
+_OP = OnlineOperator(
+    _vwap_columns,
+    VWAP_STATE_SCHEMA,
+    _FRESH,
+    out_fields=doubles("vwap", "vwap_dev"),
+    carry=doubles("price", "size"),
+)
 
 
 def online_vwap(
@@ -138,16 +96,8 @@ def online_vwap(
     the running period VWAP and the price's deviation from it. The
     groupBy(symbol) is the only shuffle; ``state_ttl`` evicts quiet
     symbols exactly as in online_indicators."""
-    if state_ttl is not None:
-        _ttl_ms(state_ttl)  # fail fast at call time, not mid-stream
-    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
-    return ticks.groupBy("symbol").applyInPandasWithState(
-        _vwap_func(anchor, state_ttl),
-        outputStructType=VWAP_OUTPUT_SCHEMA,
-        stateStructType=VWAP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if state_ttl else "NoTimeout",
-    )
+    _check_anchor(anchor)
+    return _OP.stream(ticks, anchor, state_ttl=state_ttl)
 
 
 def online_vwap_batch(ticks: DataFrame, anchor: str = "day") -> DataFrame:
@@ -155,17 +105,6 @@ def online_vwap_batch(ticks: DataFrame, anchor: str = "day") -> DataFrame:
     symbol's full in-order history via plain ``applyInPandas`` —
     pytest pins stream == batch-twin AND batch-twin == the window
     operator (operators/vwap.py), closing the parity triangle."""
-    _anchor_us(pd.Series([pd.Timestamp("2024-01-01")]), anchor)  # validate
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts").reset_index(drop=True)
-        vwaps, _ = _scan_vwap(pdf, _FRESH, anchor)
-        out = pdf[["symbol", "ts", "price", "size"]].copy()
-        # same nullable dtype as the streaming side: None ⇒ NULL
-        out["vwap"] = pd.array(vwaps, dtype="Float64")
-        out["vwap_dev"] = out["price"] - out["vwap"]
-        return out
-
-    return ticks.groupBy("symbol").applyInPandas(
-        run, schema=VWAP_OUTPUT_SCHEMA
-    )
+    _check_anchor(anchor)
+    price, size = (ticks[c].cast("double").alias(c) for c in ("price", "size"))
+    return _OP.batch(ticks.select("symbol", "ts", price, size), anchor)

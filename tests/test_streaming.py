@@ -22,6 +22,7 @@ from marketdatapipeline_spark.streaming import (
     sessionize_stream,
     ticks_to_bars,
 )
+from marketdatapipeline_spark.streaming.stateful import _coeffs
 
 
 @pytest.fixture(scope="module")
@@ -266,7 +267,7 @@ def test_sessionize_stream_matches_batch(spark, tick_dir):
 
 
 def test_sessionize_batch_nonstandard_time_col(spark, tick_dir):
-    """Regression: _session_aggs used to hardcode "ts", so a frame whose
+    """Regression: the session aggregates used to hardcode "ts", so a frame whose
     event-time column had another name either failed to resolve or
     silently aggregated a different column than it sessionized on.
     Renaming the time column must not change the sessions."""
@@ -391,31 +392,85 @@ class _FakeState:
         self.timeout = d
 
 
-def test_indicator_handler_timeout_evicts_state():
-    """On a TTL timeout invocation the handler must remove the state
-    and emit nothing; on a normal pass with a TTL it must re-arm the
-    timer after updating state."""
-    from marketdatapipeline_spark.streaming.stateful import _indicator_func
+#: every online-operator declaration: (module, scan parameters, state
+#: schema). The schemas are the checkpoint format; changing one breaks
+#: restarts from an existing checkpoint.
+_IND_STATE = (
+    "n_rows:bigint,last_close:double,gain_ewm:double,loss_ewm:double,"
+    "gain_seeded:bigint,fast_n:double,fast_d:double,slow_n:double,"
+    "slow_d:double,sig_n:double,sig_d:double"
+)
+_DECLARATIONS = {
+    "indicators": ("stateful", (_coeffs(14, 12, 26, 9),), _IND_STATE),
+    "atr": ("atr", (1 / 14,), "n_rows:bigint,last_close:double,atr:double"),
+    "bollinger": ("bollinger", (3, 2.0, "price"), "tail:array<double>"),
+    "cusum": (
+        "cusum",
+        (0.02, "price"),
+        "n_rows:bigint,last_price:double,s_pos:double,s_neg:double",
+    ),
+    "kama": (
+        "kama",
+        (3, 2, 10, "price"),
+        "n_rows:bigint,tail:array<double>,kama:double",
+    ),
+    "volume_clock": ("volume_clock", (500.0,), "cum_volume:double"),
+    "vwap": ("vwap", ("day",), "anchor_us:bigint,pv:double,v:double"),
+    "ticks": (
+        "combined",
+        (_coeffs(14, 12, 26, 9), "day"),
+        _IND_STATE + ",anchor_us:bigint,pv:double,v:double",
+    ),
+}
 
-    func = _indicator_func(14, 12, 26, 9, state_ttl="30 minutes")
 
-    timed_out = _FakeState(has_timed_out=True, existing=(1,) * 11)
+@pytest.mark.parametrize("name", sorted(_DECLARATIONS))
+def test_indicator_handler_timeout_evicts_state(name):
+    """Every declaration's handler, driven directly with no Spark: on a
+    TTL timeout invocation it must remove the state and emit nothing;
+    on a normal pass with a TTL it must emit the output schema's
+    columns, store a full state vector and re-arm the timer."""
+    import datetime as dt
+    import importlib
+
+    module, params, state_ddl = _DECLARATIONS[name]
+    op = importlib.import_module(f"marketdatapipeline_spark.streaming.{module}")._OP
+    assert op.state_schema.simpleString() == f"struct<{state_ddl}>"
+    assert len(op.fresh) == len(op.state_schema.fields)
+    func = op.handler(params, state_ttl="30 minutes")
+
+    timed_out = _FakeState(has_timed_out=True, existing=op.fresh)
     out = list(func(("A",), iter([]), timed_out))
     assert out == [] and timed_out.removed and timed_out.updated is None
 
-    import datetime as dt
-
-    st = _FakeState()
     pdf = pd.DataFrame(
         {
-            "symbol": ["A", "A"],
-            "ts": [dt.datetime(2024, 1, 1, 9, 0), dt.datetime(2024, 1, 1, 9, 1)],
-            "price": [100.0, 101.0],
+            "symbol": ["A"] * 4,
+            "ts": [dt.datetime(2024, 1, 1, 9, m) for m in (3, 0, 2, 1)],
+            "price": [100.0, 101.0, 99.5, 100.5],
+            "size": [10.0, 20.0, 30.0, 40.0],
         }
     )
-    out = list(func(("A",), iter([pdf]), st))
-    assert len(out) == 1 and len(out[0]) == 2
-    assert st.updated is not None and st.timeout == 30 * 60_000
+    pdf["close"] = pdf["price"]
+    for st in (_FakeState(), _FakeState(existing=op.fresh)):
+        out = list(func(("A",), iter([pdf]), st))
+        assert len(out) == 1 and len(out[0]) == len(pdf)
+        assert list(out[0].columns) == op.output_schema.fieldNames()
+        assert out[0]["ts"].is_monotonic_increasing
+        assert len(st.updated) == len(op.state_schema.fields)
+        assert st.timeout == 30 * 60_000 and not st.removed
+
+
+def test_online_operators_reject_non_positive_ttl(spark, tick_dir):
+    """A TTL that parses to zero or less fails when the query is built,
+    not in the first micro-batch (GroupState rejects it there)."""
+    from marketdatapipeline_spark.streaming import online_ticks, online_vwap
+
+    ticks = read_tick_stream(spark, tick_dir)
+    for ttl in ("0 minutes", -5, "-2 seconds", 0):
+        for op in (online_indicators, online_vwap, online_ticks):
+            with pytest.raises(ValueError, match="state_ttl"):
+                op(ticks, state_ttl=ttl)
 
 
 def test_online_indicators_with_ttl_matches_no_ttl_on_live_feed(spark, bars_pdf, tmp_path):
@@ -992,6 +1047,21 @@ def test_online_bollinger_matches_batch_twin_and_pandas(spark, tick_dir):
     assert len(got) == len(want) > 0
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 
+    # a zero middle band has no relative width: NULL, where pandas gives
+    # NaN, instead of a ZeroDivisionError that kills the job
+    from marketdatapipeline_spark.streaming.bollinger import _scan_boll
+
+    vals, _ = _scan_boll([0.0] * 5, [], 3, 2.0)
+    assert vals[2:] == [(0.0, 0.0, 0.0, None)] * 3
+    import datetime as dt
+
+    zeros = spark.createDataFrame(
+        [("Z", dt.datetime(2024, 1, 1, 9, m), 0.0, 1.0) for m in range(5)],
+        TICK_SCHEMA,
+    )
+    z = online_bollinger_batch(zeros, 3, k).toPandas()
+    assert z["bb_middle"].notna().sum() == 3 and z["bb_width"].isna().all()
+
     for sym, g in got.groupby("symbol"):
         g = g.sort_values("ts").reset_index(drop=True)
         p = g["price"]
@@ -1042,10 +1112,14 @@ def test_stateful_ops_invariant_under_micro_batch_slicing(
         online_bollinger_batch,
         online_cusum,
         online_cusum_batch,
+        online_indicators_batch,
         online_kama,
         online_kama_batch,
+        online_ticks,
         online_volume_clock,
         online_volume_clock_batch,
+        online_vwap,
+        online_vwap_batch,
     )
 
     rng = np.random.default_rng(20260815 + seed)
@@ -1079,6 +1153,14 @@ def test_stateful_ops_invariant_under_micro_batch_slicing(
          online_volume_clock_batch(ticks_batch, 500.0)),
         ("cusum", lambda s: online_cusum(s, 0.02),
          online_cusum_batch(ticks_batch, 0.02)),
+        ("indicators", online_indicators,
+         online_indicators_batch(closes, order_cols=("ts",))),
+        ("vwap", online_vwap, online_vwap_batch(ticks_batch)),
+        # the fused operator against the two per-leg batch twins
+        ("ticks", online_ticks,
+         online_indicators_batch(closes, order_cols=("ts",))
+         .drop("close")
+         .join(online_vwap_batch(ticks_batch), ["symbol", "ts"])),
     ]
     for name, mk_stream, batch_df in cases:
         stream = (
